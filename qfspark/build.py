@@ -61,11 +61,15 @@ Two build strategies, both shaped for the 10^12-row design point:
         row-level aggregation; demonstrates hot-key skew handling with
         plain relational operators.
 
-    ``'auto'`` — measures the input instead of guessing: a high duplicate
-        ratio (probed on a bounded prefix) selects 'combine'; otherwise
-        the expected raw rows per shard (exact input count / 2^shard_bits)
+    ``'auto'`` — measures the input instead of guessing: a duplicate
+        ratio of 4 or more selects 'combine'; otherwise the expected raw
+        rows per shard (scan-free ``approx_row_count`` / 2^shard_bits)
         selects 'storage' above ``ARROW_MAX_ROWS_PER_SHARD`` — the arrow
-        path's single-fat-row bound — and 'arrow' below it.
+        path's single-fat-row bound — and 'arrow' below it. The ratio
+        costs one Spark job: the first 200k hashes are Arrow-collected
+        (at most 1.6 MB to the driver) and the sample size and its
+        distinct count both come from those same rows. The choice is
+        logged at INFO on the ``qfspark.build`` logger.
 
     Payloads can be written as *sidecar files* (``payload_dir``): each
     shard task writes its serialized filter to content-addressed storage
@@ -85,6 +89,7 @@ disagree with every other engine's byte-hash of an absent value).
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import time
 from typing import Iterator
@@ -99,6 +104,8 @@ from . import __version__ as _CODE_VERSION
 from .kernel import QF
 from .serde import qf_from_bytes, qf_to_bytes
 from .sizing import QFConfig
+
+log = logging.getLogger(__name__)
 
 DEFAULT_HASH = "xxhash64"
 
@@ -157,6 +164,14 @@ def hash_column(col, hash_name: str = DEFAULT_HASH,
         return pd.Series(hv.view(np.int64))
 
     return _hash_udf(col)
+
+
+def _collect_hashes(hashed: DataFrame) -> np.ndarray:
+    """Arrow-collect ``hashed``'s hash column to the driver as a writable
+    uint64 array (one Spark job, 8 B per row)."""
+    a = hashed.toArrow().column(HASH_COL).to_numpy(zero_copy_only=False)
+    hv = np.asarray(a, dtype=np.int64).view(np.uint64)
+    return hv if hv.flags.writeable else hv.copy()
 
 
 def _dtype_of(df: DataFrame, col: str) -> str:
@@ -257,11 +272,7 @@ def build_qf(
 
         est = approx_row_count(hashed, fallback_count=False)
     if est is not None and est <= SMALL_BUILD_COLLECT_ROWS:
-        a = hashed.toArrow().column(HASH_COL).to_numpy(
-            zero_copy_only=False)
-        hv = np.asarray(a, dtype=np.int64).view(np.uint64)
-        if not hv.flags.writeable:
-            hv = hv.copy()
+        hv = _collect_hashes(hashed)
         hv.sort()
         return QF.from_hashes(hv, None, config)
 
@@ -624,17 +635,21 @@ def build_sharded_qf(
         # collect_list row; see the module docstring), in which case
         # 'storage' takes over: its spill-through-parquet exchange has no
         # per-row or per-shard size bound at all.
-        # Dup ratio probed on a bounded prefix — a heuristic, not an
-        # exact census; rows/shard uses a scan-free estimate
+        # The dup ratio costs ONE Spark job: the first 200k hashes are
+        # Arrow-collected (8 B each, so at most 1.6 MB reaches the
+        # driver), and the sample size and its distinct count are both
+        # taken driver-side from those same rows — a heuristic on a
+        # bounded prefix, not an exact census. (Two separate actions on
+        # a global limit need not see the same rows, and the distinct
+        # count would add a shuffle.) Rows/shard uses a scan-free estimate
         # (approx_row_count), which falls back to an exact count when
         # the plan contains row-expanding nodes (Generate/Join) that
         # would make parquet-footer counts an underestimate — the
         # direction that could flip this guard to 'arrow' on an input
         # whose true rows/shard exceed the arrow path's fat-row bound.
-        probe = hashed.limit(200_000)
-        n_probe = probe.count()
-        n_distinct = probe.distinct().count()
-        dup_ratio = n_probe / max(n_distinct, 1)
+        head = _collect_hashes(hashed.limit(200_000))
+        dup_ratio = len(head) / max(len(np.unique(head)), 1)
+        rows_per_shard = None
         if dup_ratio >= 4:
             exchange = "combine"
         else:
@@ -647,6 +662,13 @@ def build_sharded_qf(
             exchange = ("storage"
                         if rows_per_shard > ARROW_MAX_ROWS_PER_SHARD
                         else "arrow")
+        log.info("build_sharded_qf exchange=auto chose %s (sampled_rows=%d"
+                 ", dup_ratio=%.3f, rows_per_shard=%s)", exchange,
+                 len(head), dup_ratio, rows_per_shard,
+                 extra={"qf_exchange": exchange,
+                        "qf_sampled_rows": len(head),
+                        "qf_dup_ratio": dup_ratio,
+                        "qf_rows_per_shard": rows_per_shard})
 
     if exchange == "arrow":
         shards_df = _exchange_arrow(hashed, sb, config, done, payload_dir)

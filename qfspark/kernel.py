@@ -171,6 +171,16 @@ class QF:
     def __len__(self) -> int:
         return self.entries
 
+    def _c_writable(self) -> bool:
+        """Whether the compiled kernels may write this filter: they take
+        unpacked word arrays and write through raw pointers, so a
+        read-only array (a ``disk.open_readonly`` memmap) must take the
+        numpy path, which raises numpy's clean ValueError instead of
+        faulting."""
+        return all(vec is None or (isinstance(vec, UnpackedVector)
+                                   and vec.words.flags.writeable)
+                   for vec in (self.filter, self.storage))
+
     # ------------------------------------------------------------------
     # lifecycle (reference Disk.Close, disk.go:99-104)
     # ------------------------------------------------------------------
@@ -292,9 +302,7 @@ class QF:
         # dispatch, one sequential pass instead of ~15 full-array ones
         # (byte-identity pinned in tests/test_round7_fixes.py; the
         # numpy path below is the everywhere-fallback and the twin).
-        if (isinstance(self.filter, UnpackedVector)
-                and (self.storage is None
-                     or isinstance(self.storage, UnpackedVector))):
+        if self._c_writable():
             from . import ckernel
 
             clib = ckernel.get_kernel()
@@ -661,10 +669,7 @@ class QF:
         # differential twin; byte-identity pinned in
         # tests/test_round7_fixes.py).
         clib = None
-        if (isinstance(self.filter, UnpackedVector)
-                and (self.storage is None
-                     or isinstance(self.storage, UnpackedVector))
-                and value >= 0):
+        if self._c_writable() and value >= 0:
             from .ckernel import get_kernel
 
             clib = get_kernel()

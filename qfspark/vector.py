@@ -21,6 +21,14 @@ U64 = np.uint64
 _WORD_BITS = 64
 
 
+def _check_writable(words: np.ndarray) -> None:
+    """numpy 1.x ``ufunc.at`` ignores the WRITEABLE flag and faults on a
+    read-only memmap (``disk.open_readonly``), so its callers raise
+    numpy's own error for a read-only target first."""
+    if not words.flags.writeable:
+        raise ValueError("assignment destination is read-only")
+
+
 def _words_required(bits: int, count: int) -> int:
     # +1 word of slack, mirroring the reference's allocation
     # (packed.go:52-55) so two-word reads at the last index never run out.
@@ -69,6 +77,7 @@ class PackedVector:
             raise OverflowError(
                 f"value wider than {self.bits} bits in packed scatter"
             )
+        _check_writable(self.words)
         ix = ix.astype(np.int64, copy=False)
         bitstart = ix * self.bits
         word = bitstart >> 6
@@ -101,6 +110,7 @@ class PackedVector:
             raise OverflowError(
                 f"value wider than {self.bits} bits in packed scatter"
             )
+        _check_writable(self.words)
         ix = ix.astype(np.int64, copy=False)
         bitstart = ix * self.bits
         word = bitstart >> 6
@@ -192,6 +202,7 @@ class UnpackedVector:
             raise OverflowError(
                 f"value wider than {self.bits} bits in unpacked scatter"
             )
+        _check_writable(self.words)
         np.bitwise_or.at(self.words, ix.astype(np.int64, copy=False), vals)
 
     def scatter_or_unique(self, ix: np.ndarray, vals: np.ndarray) -> None:

@@ -39,6 +39,52 @@ def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits):
     assert int(fa.sum()) == 0
 
 
+_RO_WRITE = r"""
+import sys
+import numpy as np
+from qfspark import disk
+ro = disk.open_readonly(sys.argv[1])
+hv = np.arange(1, 200, dtype=np.uint64) << np.uint64(40)
+writes = [lambda: ro.insert_hashes(hv), lambda: ro.insert_hashes(hv, add=True),
+          lambda: ro.insert_hash(int(hv[0]))]
+if ro.entries == 0:
+    writes.append(lambda: ro._bulk_fill(hv, None))
+for write in writes:
+    try:
+        write()
+        print("wrote")
+    except ValueError as e:
+        print("ValueError:", e)
+"""
+
+
+@pytest.mark.parametrize("entries", [300, 0])
+@pytest.mark.parametrize("bit_packed", [False, True])
+@pytest.mark.parametrize("counter_bits", [0, 15])
+def test_open_readonly_write_raises_cleanly(tmp_path, bit_packed,
+                                            counter_bits, entries):
+    """Writing into a read-only memmap raises ValueError on every path
+    (C kernel gated on WRITEABLE, numpy ufunc.at guarded) instead of
+    faulting; run in a child so a fault reports instead of killing the
+    suite. The file on disk is untouched."""
+    cfg = QFConfig(counter_bits=counter_bits, bit_packed=bit_packed,
+                   expected_entries=300)
+    qf = QF.from_keys(TEST_STRINGS[:entries], config=cfg)
+    path = str(tmp_path / "f.qf")
+    save(qf, path)
+    before = open(path, "rb").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", _RO_WRITE, path],
+                          capture_output=True, text=True, timeout=120,
+                          env={**os.environ, "PYTHONPATH": root})
+    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
+    lines = proc.stdout.splitlines()
+    assert len(lines) == (4 if entries == 0 else 3)
+    assert all(ln == "ValueError: assignment destination is read-only"
+               for ln in lines), lines
+    assert open(path, "rb").read() == before
+
+
 def test_header_peek(tmp_path):
     qf = QF.from_keys(["a", "b"], config=QFConfig(counter_bits=9, hash_name="xxhash64"))
     path = str(tmp_path / "h.qf")

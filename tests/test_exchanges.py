@@ -167,20 +167,137 @@ def test_null_keys_dropped_and_never_members(spark):
     assert sum(r.entries for r in sharded_rows) == 2
 
 
-def test_exchange_auto_picks_by_dup_ratio(spark):
-    cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
+def _spy_exchanges(monkeypatch, on_call=None):
+    """Record which ``_exchange_*`` builder ``build_sharded_qf`` calls;
+    ``on_call(name, phase)`` runs just before and after the call."""
+    from qfspark import build
+
+    chosen = []
+    for name in ("arrow", "storage", "combine", "salted"):
+        def spy(*args, _name=name, _fn=getattr(build, f"_exchange_{name}"),
+                **kwargs):
+            chosen.append(_name)
+            if on_call:
+                on_call(_name, "before")
+            out = _fn(*args, **kwargs)
+            if on_call:
+                on_call(_name, "after")
+            return out
+        monkeypatch.setattr(build, f"_exchange_{name}", spy)
+    return chosen
+
+
+def _uniq_heavy(spark):
     uniq = spark.createDataFrame([(f"u{i}",) for i in range(3000)],
                                  "key string")
     heavy = spark.createDataFrame([(f"d{i % 50}",) for i in range(3000)],
                                   "key string")
-    # both must build correctly whatever strategy auto picks, and the
-    # artifacts must equal the explicit-strategy ones byte-for-byte
-    for df in (uniq, heavy):
+    return uniq, heavy
+
+
+def _assert_auto_picks(spark, monkeypatch, cfg):
+    uniq, heavy = _uniq_heavy(spark)
+    # dup ratio 1 -> 'arrow'; 3000 rows over 50 keys = 60 -> 'combine'
+    for df, want in ((uniq, "arrow"), (heavy, "combine")):
+        chosen = _spy_exchanges(monkeypatch)
         auto = _payloads(build_sharded_qf(df, "key", shard_bits=2,
                                           config=cfg, exchange="auto"))
+        assert chosen == [want]
+        monkeypatch.undo()
         arrow = _payloads(build_sharded_qf(df, "key", shard_bits=2,
                                            config=cfg, exchange="arrow"))
         assert auto == arrow  # canonical bytes are strategy-independent
+
+
+def test_exchange_auto_picks_by_dup_ratio(spark, monkeypatch):
+    _assert_auto_picks(spark, monkeypatch,
+                       QFConfig(counter_bits=16, hash_name="xxhash64"))
+
+
+def test_exchange_auto_picks_with_python_hash(spark, monkeypatch):
+    # murmur64a hashes in a pandas UDF, not in the JVM: the sampled
+    # prefix crosses the same UDF before it is Arrow-collected
+    _assert_auto_picks(spark, monkeypatch,
+                       QFConfig(counter_bits=16, hash_name="murmur64a"))
+
+
+def test_exchange_auto_empty_input(spark, monkeypatch):
+    cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
+    empty = spark.createDataFrame([], "key string")
+    chosen = _spy_exchanges(monkeypatch)
+    rows = build_sharded_qf(empty, "key", shard_bits=2, config=cfg,
+                            exchange="auto").collect()
+    assert chosen == ["arrow"]  # 0 sampled rows: dup ratio 0
+    assert rows == []
+
+
+def test_exchange_auto_logs_decision(spark, caplog):
+    import logging
+
+    cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
+    uniq, heavy = _uniq_heavy(spark)
+    caplog.set_level(logging.INFO, logger="qfspark.build")
+    for df in (uniq, heavy):
+        build_sharded_qf(df, "key", shard_bits=2, config=cfg,
+                         exchange="auto")
+    recs = [r for r in caplog.records if r.name == "qfspark.build"
+            and hasattr(r, "qf_exchange")]
+    assert [r.levelno for r in recs] == [logging.INFO] * 2
+    u, h = recs
+    assert (u.qf_exchange, u.qf_sampled_rows, u.qf_dup_ratio,
+            u.qf_rows_per_shard) == ("arrow", 3000, 1.0, 750.0)
+    # 'combine' is chosen on the ratio alone: the estimate is not consulted
+    assert (h.qf_exchange, h.qf_sampled_rows, h.qf_dup_ratio,
+            h.qf_rows_per_shard) == ("combine", 3000, 60.0, None)
+    assert "arrow" in u.getMessage() and "dup_ratio=1.000" in u.getMessage()
+
+
+@pytest.mark.parametrize("kind", ["unique_parquet", "heavy"])
+def test_exchange_auto_decides_in_one_job(spark, monkeypatch, tmp_path,
+                                          kind):
+    """Choosing the exchange costs exactly one Spark job (the prefix
+    collect), and the chosen exchange builder itself stays lazy. The
+    unique input is parquet so the rows-per-shard guard reads footers
+    instead of counting."""
+    uniq, heavy = _uniq_heavy(spark)
+    if kind == "unique_parquet":
+        uniq.write.parquet(str(tmp_path / "uniq"))
+        df, want = spark.read.parquet(str(tmp_path / "uniq")), "arrow"
+    else:
+        df, want = heavy, "combine"
+    sc = spark.sparkContext
+    group = f"qf-auto-jobs-{kind}"
+    jobs_at = {}
+
+    def on_call(name, phase):
+        jobs_at[phase] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    chosen = _spy_exchanges(monkeypatch, on_call)
+    sc.setJobGroup(group, "exchange='auto' decision")
+    try:
+        build_sharded_qf(df, "key", shard_bits=2, exchange="auto")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert chosen == [want]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert jobs_at == {"before": 1, "after": 1}
+
+
+def test_arrow_exchange_plan_has_one_exchange(spark):
+    """The arrow shard table shuffles once: the second groupBy('shard')
+    (applyInArrow) reuses the aggregation's hashpartitioning(shard) and
+    adds only a Sort."""
+    import re
+
+    cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
+    keys = spark.range(2000).selectExpr("concat('k', id % 700) AS key")
+    sdf = build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
+                           exchange="arrow")
+    # the not-yet-run adaptive plan prints the physical plan once
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\w*Exchange\b", plan) == ["Exchange"], plan
+    assert "hashpartitioning(shard" in plan
 
 
 def test_filter_unseen_via_shard_table(spark, keys_df):
